@@ -89,6 +89,60 @@ def build_stdout_payload(full: dict) -> dict:
     return out
 
 
+def setup_fixtures(spark, sf_dir: str) -> dict[str, str]:
+    """Write the per-data-generation fixtures for the MEASURED sf_dir:
+    the streaming chunk feeds (chunks.py) and the bucketed / partitioned
+    / clustered / snapshot / ORC / fragmented event tables. They are
+    written once per data generation, not per query run, so no measured
+    query should absorb the one-time write.
+
+    Each setup step is attempted on its own, so one failure does not
+    skip the rest; every failure is named on stderr (as the warmup loop
+    does) and returned as {step: error} for the SPARK_GRAFT_BENCH_OUT
+    snapshot. A failed step leaves its fixture to be written inside
+    some query's measured window.
+    """
+    from data_engineering_spotify_etl_airflow_aws_spark.operators import (
+        extras,
+        maintenance,
+    )
+    from data_engineering_spotify_etl_airflow_aws_spark.streaming import (
+        chunks,
+        dedup,
+        joins,
+    )
+
+    failed: dict[str, str] = {}
+    for build in (
+        chunks.plain_event_feed,
+        dedup.dup_event_feed,
+        joins.outer_event_feed,
+        extras.ensure_bucketed_join_tables,
+        extras.ensure_day_partitioned_events,
+        extras.ensure_range_clustered_events,
+        extras.ensure_schema_evolution_snapshots,
+        extras.ensure_zorder_clustered_events,
+        extras.ensure_orc_events,
+        maintenance.ensure_fragmented_events,
+    ):
+        try:
+            build(spark, sf_dir)
+        except Exception as exc:
+            failed[build.__name__] = f"{type(exc).__name__}: {exc}"[:200]
+            print(
+                f"bench: fixture setup {build.__name__} failed "
+                f"({type(exc).__name__}: {exc})"[:300],
+                file=sys.stderr,
+            )
+    if failed:
+        print(
+            f"bench: {len(failed)} fixture setups failed - the queries "
+            "reading them will write them inside measured windows",
+            file=sys.stderr,
+        )
+    return failed
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -176,68 +230,7 @@ def main() -> int:
             "windows (see r13 unwarmed-sf1 finding)",
             file=sys.stderr,
         )
-    # Pre-build the streaming chunk feeds for the MEASURED sf_dir: the
-    # chunk layout is fixture setup (written once per data generation,
-    # chunks.py), not part of the streaming operators under test, so the
-    # first streaming query of a fresh generation should not absorb the
-    # one-time write into its measurement.
-    try:
-        from data_engineering_spotify_etl_airflow_aws_spark.streaming.chunks import (
-            plain_event_feed,
-        )
-        from data_engineering_spotify_etl_airflow_aws_spark.streaming.dedup import (
-            dup_event_feed,
-        )
-
-        from data_engineering_spotify_etl_airflow_aws_spark.streaming.joins import (
-            outer_event_feed,
-        )
-
-        plain_event_feed(spark, sf_dir)
-        dup_event_feed(spark, sf_dir)
-        outer_event_feed(spark, sf_dir)
-    except Exception:
-        pass
-    # Same setup-vs-operator split for the bucketed join tables: the
-    # bucketed write happens once per data generation, not per query run.
-    try:
-        from data_engineering_spotify_etl_airflow_aws_spark.operators.extras import (
-            ensure_bucketed_join_tables,
-        )
-
-        ensure_bucketed_join_tables(spark, sf_dir)
-        from data_engineering_spotify_etl_airflow_aws_spark.operators.extras import (
-            ensure_day_partitioned_events,
-        )
-
-        ensure_day_partitioned_events(spark, sf_dir)
-        from data_engineering_spotify_etl_airflow_aws_spark.operators.extras import (
-            ensure_range_clustered_events,
-        )
-
-        ensure_range_clustered_events(spark, sf_dir)
-        from data_engineering_spotify_etl_airflow_aws_spark.operators.extras import (
-            ensure_schema_evolution_snapshots,
-        )
-
-        ensure_schema_evolution_snapshots(spark, sf_dir)
-        from data_engineering_spotify_etl_airflow_aws_spark.operators.extras import (
-            ensure_zorder_clustered_events,
-        )
-
-        ensure_zorder_clustered_events(spark, sf_dir)
-        from data_engineering_spotify_etl_airflow_aws_spark.operators.extras import (
-            ensure_orc_events,
-        )
-
-        ensure_orc_events(spark, sf_dir)
-        from data_engineering_spotify_etl_airflow_aws_spark.operators.maintenance import (
-            ensure_fragmented_events,
-        )
-
-        ensure_fragmented_events(spark, sf_dir)
-    except Exception:
-        pass
+    setup_failed = setup_fixtures(spark, sf_dir)
     spark.catalog.clearCache()
 
     # Optional subset run (SPARK_GRAFT_QUERIES="a,b,c"): used by the
@@ -344,6 +337,7 @@ def main() -> int:
         out["repeat_failed"] = repeat_failed
     if failed:
         out["failed"] = failed
+    out["setup_failed"] = setup_failed
     # stdout carries the lean contract line; the full payload (with
     # repeat_samples / failure detail) goes to the snapshot file below
     print(json.dumps(build_stdout_payload(out)), flush=True)

@@ -40,12 +40,7 @@ from pyspark.sql.window import Window as W
 
 from ..functions import dsum, oracle_dsum
 from ..registry import query
-from ..caches import register_cache
-from ..tables import load_table
-
-# Gap relation persisted by the previous attribution_window_sweep call
-# when the scale gate engages (released on the next call; caches.py).
-_ATTR_CACHE = register_cache([])
+from ..tables import load_table, persist_when_scaled
 
 # ---------------------------------------------------------------------------
 # Time-series resample + gap fill: regularize each user's event stream onto
@@ -1115,13 +1110,7 @@ def attribution_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cheap-subtree lesson); at corpus scale the second asof join is a
     # full extra shuffle+sort, so the 2-column per-purchase gap
     # relation persists (disk-backed) once the input has real splits.
-    from ..tables import persist_when_scaled, scan_splits
-
-    while _ATTR_CACHE:
-        _ATTR_CACHE.pop().unpersist()
-    g = persist_when_scaled(
-        g, _ATTR_CACHE, scan_splits(spark, sf_dir, "events"), dup=2
-    )
+    g = persist_when_scaled(g, sf_dir, "events", dup=2)
     t = g.agg(F.count("*").cast("bigint").alias("n_purchases"))
     wins = F.explode(
         F.array(*[F.lit(h).cast("bigint") for h in _ATTR_WINDOWS_H])

@@ -16,8 +16,11 @@ schema + order-insensitive value hash between Spark and DuckDB):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from typing import TYPE_CHECKING
+
+from .caches import query_scope
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
@@ -29,12 +32,23 @@ ORACLES: dict[str, str] = {}
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+    """Register ``fn`` under ``name``. The registered callable runs ``fn``
+    inside caches.query_scope(), so the previous query's persisted
+    relations are released when this one starts; functools.wraps keeps
+    ``__module__`` and ``inspect.getsource`` pointing at ``fn``."""
+
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query registration: {name}")
-        QUERIES[name] = fn
+
+        @functools.wraps(fn)
+        def scoped(*args, **kwargs) -> DataFrame:
+            with query_scope():
+                return fn(*args, **kwargs)
+
+        QUERIES[name] = scoped
         if oracle is not None:
             ORACLES[name] = oracle
-        return fn
+        return scoped
 
     return deco

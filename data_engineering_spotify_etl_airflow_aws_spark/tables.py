@@ -18,9 +18,13 @@ correctness driver hands us a session we didn't build.
 
 from __future__ import annotations
 
+import os
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .caches import persist
 from .session import apply_runtime_confs
 
 TABLES = (
@@ -106,11 +110,7 @@ def scan_splits(spark: SparkSession, sf_dir: str, name: str) -> int:
 
 
 def persist_when_scaled(
-    df: DataFrame,
-    cache: list,
-    splits: int,
-    dup: int,
-    parts: int | None = None,
+    df: DataFrame, sf_dir: str, table: str, dup: int
 ) -> DataFrame:
     """Persist a multiply-consumed derived relation ONLY when its input
     is large enough that re-executing the duplicated subtree costs real
@@ -131,31 +131,28 @@ def persist_when_scaled(
     Gate: engage when ``dup x splits >= session parallelism``, i.e.
     when one concurrent execution of all duplicated branches would
     already saturate the cores, so re-execution can no longer ride idle
-    capacity. ``splits`` is the source scan's split count - pass
-    ``scan_splits(spark, sf_dir, table)`` (memoized; the fixture
-    parquet is ONE split, so the gate never engages at bench scale).
+    capacity. ``splits`` is the split count of ``table``'s scan under
+    ``sf_dir`` (scan_splits, memoized). A fixture parquet is ONE split,
+    so at fixture scale the gate engages exactly when ``dup >=
+    defaultParallelism`` - every ``dup >= 4`` site on a ``local[4]``
+    session, every ``dup >= 8`` site at ``local[8]``.
 
-    The caller owns the release lifecycle (drain ``cache`` at query
-    entry, caches.py); this helper only appends when it persists.
+    An engaged persist is registered with the running query's scope
+    (caches.persist), so it lives until the next registered query
+    starts or caches.release_all().
     SPARK_GRAFT_FORCE_SCALE_PERSIST=1 engages the gate unconditionally
     (used by the forced-gate oracle-parity run and the unit tests; the
     driver never sets it).
     """
-    import os
-
-    from pyspark import StorageLevel
-
     sess = df.sparkSession
-    target = parts or sess.sparkContext.defaultParallelism
-    forced = os.environ.get("SPARK_GRAFT_FORCE_SCALE_PERSIST", "") == "1"
-    if not forced and splits * max(dup, 1) < target:
-        return df
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    cache.append(out)
-    return out
+    if os.environ.get("SPARK_GRAFT_FORCE_SCALE_PERSIST", "") != "1":
+        splits = scan_splits(sess, sf_dir, table)
+        if splits * max(dup, 1) < sess.sparkContext.defaultParallelism:
+            return df
+    return persist(df, StorageLevel.MEMORY_AND_DISK)
 
 
-def widen_small_scan(df: DataFrame, parts: int | None = None) -> DataFrame:
+def widen_small_scan(df: DataFrame) -> DataFrame:
     """Fan a small scan out to the session's parallelism before CPU-heavy
     per-row work (regex tokenization, shingling, n-gram building).
 
@@ -165,8 +162,7 @@ def widen_small_scan(df: DataFrame, parts: int | None = None) -> DataFrame:
     scan already has >= parallelism splits and this is a no-op, so the
     shuffle only exists in exactly the regime where it is free.
     """
-    sess = df.sparkSession
-    target = parts or sess.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

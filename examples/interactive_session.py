@@ -3,7 +3,8 @@
   1. batch analytics via the query registry,
   2. continuous auto-ingest (the Snowpipe AUTO_INGEST analog) driven and
      introspected with pipe_status() - SHOW PIPES / DESC PIPE,
-  3. cache lifecycle: persisted operator bases released in one call.
+  3. cache lifecycle: a query's persisted relations live until the next
+     registered query starts, or until caches.release_all().
 
 Run it directly (`python examples/interactive_session.py [sf_dir]`) or
 import and call main(spark, sf_dir) from a notebook/test with an
@@ -36,7 +37,8 @@ def main(spark, sf_dir: str = "/root/testdata/sf0.001") -> dict:
     top = registry.QUERIES["q1_top_trending"](spark, sf_dir)
     out["q1_rows"] = top.count()
 
-    # a query that persists a shared base relation (released in step 3)
+    # a query that persists a shared base relation: it stays persisted
+    # until the next registered query starts (or step 3)
     out["lsh_rows"] = registry.QUERIES["minhash_lsh_near_dup"](
         spark, sf_dir
     ).count()
@@ -61,7 +63,9 @@ def main(spark, sf_dir: str = "/root/testdata/sf0.001") -> dict:
         q.stop()
         shutil.rmtree(work, ignore_errors=True)
 
-    # -- 3. executor memory back without waiting for session shutdown
+    # -- 3. executor memory back without waiting for the next registered
+    # query or session shutdown: release_all() unpersists every relation
+    # the last query persisted
     caches.release_all()
     return out
 

@@ -395,6 +395,7 @@ def test_persist_when_scaled_gate_semantics(spark, monkeypatch):
     consistent losses there) and engage exactly when dup x input-splits
     reaches the session parallelism - plus unconditionally under the
     forced-gate env hook used by the oracle-parity forced run."""
+    from data_engineering_spotify_etl_airflow_aws_spark import caches
     from data_engineering_spotify_etl_airflow_aws_spark.tables import (
         load_table,
         persist_when_scaled,
@@ -412,31 +413,134 @@ def test_persist_when_scaled_gate_semantics(spark, monkeypatch):
     assert splits * 4 < target or target <= 4
 
     # fixture regime: gate off - passthrough, nothing persisted/cached
-    cache: list = []
+    caches.release_all()
     monkeypatch.delenv("SPARK_GRAFT_FORCE_SCALE_PERSIST", raising=False)
-    out = persist_when_scaled(docs, cache, splits, dup=4)
-    assert out is docs and cache == []
+    out = persist_when_scaled(docs, SF_CORRECT, "documents", dup=4)
+    assert out is docs and caches._PERSISTED == []
     assert not out.storageLevel.useMemory and not out.storageLevel.useDisk
 
-    # scale regime (modelled via the parts override): gate on - the
-    # relation is persisted, registered, and value-identical (persist()
-    # returns the same DataFrame object in PySpark, so the observable
-    # is the storage level + cache registration, not object identity)
+    # scale regime (dup x one split reaches the parallelism): gate on -
+    # the relation is persisted, registered with the query scope, and
+    # value-identical (persist() returns the same DataFrame object in
+    # PySpark, so the observable is the storage level + scope
+    # registration, not object identity)
     baseline = sorted(map(tuple, docs.collect()))
-    engaged = persist_when_scaled(docs, cache, splits, dup=4, parts=2)
-    assert cache == [engaged]
+    engaged = persist_when_scaled(docs, SF_CORRECT, "documents", dup=target)
+    assert caches._PERSISTED == [engaged]
     assert engaged.storageLevel.useMemory and engaged.storageLevel.useDisk
     assert sorted(map(tuple, engaged.collect())) == baseline
-    while cache:
-        cache.pop().unpersist()
+    caches.release_all()
 
     # forced-gate hook engages regardless of input splits
     monkeypatch.setenv("SPARK_GRAFT_FORCE_SCALE_PERSIST", "1")
-    forced = persist_when_scaled(docs, cache, splits, dup=1)
-    assert cache == [forced]
+    forced = persist_when_scaled(docs, SF_CORRECT, "documents", dup=1)
+    assert caches._PERSISTED == [forced]
     assert forced.storageLevel.useMemory
-    while cache:
-        cache.pop().unpersist()
+    caches.release_all()
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keys()}
+
+
+def test_query_scope_releases_previous_query_on_entry(spark):
+    """A query's persisted relations live until the next registered
+    query starts: entering the second query unpersists the first one's
+    RDDs, and release_all() leaves none behind."""
+    from data_engineering_spotify_etl_airflow_aws_spark import caches
+    from data_engineering_spotify_etl_airflow_aws_spark.registry import QUERIES
+
+    from .conftest import SF_SMOKE
+
+    caches.release_all()
+    before = _persistent_rdd_ids(spark)
+    QUERIES["minhash_lsh_near_dup"](spark, SF_SMOKE).collect()
+    first = _persistent_rdd_ids(spark) - before
+    assert first, "minhash_lsh_near_dup should materialize its persists"
+
+    ivf = QUERIES["ivf_topk_similar"](spark, SF_SMOKE)
+    assert not first & _persistent_rdd_ids(spark)
+    ivf.collect()
+    second = _persistent_rdd_ids(spark) - before
+    assert second, "ivf_topk_similar should materialize its persist"
+
+    caches.release_all()
+    assert not _persistent_rdd_ids(spark) - before
+    assert caches._PERSISTED == []
+
+
+def test_nested_queries_share_the_outer_scope(spark, monkeypatch):
+    """dedup_clusters and ann_recall_eval call other registered queries
+    while they build. Only the outermost call may release: an inner
+    entry must not unpersist what the outer query already registered,
+    and both still return their oracle rows."""
+    from data_engineering_spotify_etl_airflow_aws_spark import caches
+    from data_engineering_spotify_etl_airflow_aws_spark.registry import (
+        ORACLES,
+        QUERIES,
+    )
+
+    from .conftest import SF_SMOKE, make_duckdb
+    from .test_oracle_parity import rows_to_multiset
+
+    real_release = caches.release_all
+    releases: list[int] = []
+
+    def counted_release() -> None:
+        releases.append(len(caches._PERSISTED))
+        real_release()
+
+    monkeypatch.setattr(caches, "release_all", counted_release)
+    duck = make_duckdb(SF_SMOKE)
+    try:
+        for name in ("dedup_clusters", "ann_recall_eval"):
+            releases.clear()
+            df = QUERIES[name](spark, SF_SMOKE)
+            assert len(releases) == 1, (name, releases)
+            scope = list(caches._PERSISTED)
+            assert scope, name
+            assert all(d.storageLevel.useMemory for d in scope), name
+            rows = df.collect()
+            rel = duck.execute(ORACLES[name])
+            cols = [d[0] for d in rel.description]
+            assert rows_to_multiset(
+                df.columns, [tuple(r) for r in rows]
+            ) == rows_to_multiset(cols, rel.fetchall()), name
+    finally:
+        duck.close()
+        real_release()
+
+
+def test_operators_persist_only_through_the_query_scope():
+    """Lint: every operator persist goes through caches.persist (or the
+    scale gate), so the query scope owns its release - no bare
+    ``.persist(`` call and no module-level ``_*_CACHE`` list under
+    operators/."""
+    import ast
+    from pathlib import Path
+
+    import data_engineering_spotify_etl_airflow_aws_spark.operators as ops
+
+    findings = []
+    for path in sorted(Path(ops.__file__).parent.glob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "persist"
+            ):
+                findings.append(f"{path.name}:{node.lineno}: .persist(")
+        for node in tree.body:
+            targets = (
+                node.targets if isinstance(node, ast.Assign)
+                else [node.target] if isinstance(node, ast.AnnAssign)
+                else []
+            )
+            for t in targets:
+                if isinstance(t, ast.Name) and t.id.endswith("_CACHE"):
+                    findings.append(f"{path.name}:{node.lineno}: {t.id}")
+    assert not findings, findings
 
 
 # The call sites that gained the r17 scale-gated persist: the r16

@@ -2,8 +2,8 @@
 A/B discipline: any perf-relevant change ships with an interleaved pair
 in evidence/).
 
-Compares the pre-rewrite tree (a git worktree pinned at the commit
-before tools/apply_string_hop_r15.py ran) against the working tree on
+Compares the pre-rewrite tree (a git worktree pinned at the parent of
+the rewrite, commit a552ed4) against the working tree on
 the queries whose plans gained per-row or per-window-frame string hops
 — the only places the hop is not a once-per-group epsilon:
 
