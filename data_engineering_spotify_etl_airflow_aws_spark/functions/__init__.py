@@ -164,6 +164,24 @@ ORACLE_TOKENS = (
     "list_filter(string_split_regex(lower({col}), '[^a-z0-9]+'), x -> x <> '')"
 )
 
+# English stop list of text_quality_stats (operators/text.py) and of every
+# query that re-derives its quality score; oracles render it too.
+STOP_EN = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
+
+
+def quality_micro(toks: str) -> Column:
+    """text_quality_stats' score of the non-empty token-array column
+    `toks`, quantized to micro ints: floor(q * 1e6 + 0.5) over the fixed-
+    association IEEE chain that the oracles spell out term for term."""
+    stop = ", ".join(f"'{w}'" for w in STOP_EN)
+    return F.expr(
+        f"cast(floor(((0.4 * least(cast(size({toks}) as double) / 100.0, 1.0)"
+        f" + 0.3 * (1.0 - cast(size(filter({toks}, x -> array_contains("
+        f"array({stop}), x))) as double) / size({toks})))"
+        f" + 0.3 * (cast(size(array_distinct({toks})) as double)"
+        f" / size({toks}))) * 1000000 + 0.5) as bigint)"
+    )
+
 
 # ---------------------------------------------------------------------------
 # TIMESTAMP_TZ analog (reference S:47 `song_added TIMESTAMP_TZ`).

@@ -51,8 +51,21 @@ from pyspark.sql.window import Window as W
 
 from ..caches import persist
 from ..registry import query
+from ..session import shuffle_partitions
 from ..tables import load_table
 from .dedup import _DUCK_H32, _DUCK_SHINGLE_BASE, _SPARK_H32, JACCARD_TAU, ngram_jaccard_near_dup
+
+
+def _edge_frame_partitions(spark: SparkSession, n_edges: int) -> int:
+    """Shuffle width for an iteration over an n_edges frame: one
+    partition per ~50k edges with a floor of 8, capped at the session
+    value (never WIDEN - the min holds even when the session is already
+    narrower than 8). The floor was re-measured in round 5: a single
+    partition serializes the per-round micro-jobs and is ~1.6x SLOWER
+    than 8 even on a 256-edge fixture (the cost is job launch, not task
+    count), while a 100 TB edge set still gets session width."""
+    current = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return min(current, max(8, n_edges // 50_000 + 1))
 
 
 def connected_components(
@@ -87,28 +100,13 @@ def connected_components(
     # Size the ROUND shuffles by the iteration frame (edge endpoints), not
     # the session default: und is materialized, so its count is free, and
     # every relation inside the loop is O(edges) - at near-dup densities a
-    # tiny fraction of the corpus. One shuffle partition per ~50k edges
-    # (floor 8) keeps per-round task overhead proportional to the frame;
-    # a 100 TB edge set stays at the session width. The upstream edge
-    # plan (the expensive part) already ran at full width inside the
-    # localCheckpoint above.
+    # tiny fraction of the corpus. The upstream edge plan (the expensive
+    # part) already ran at full width inside the localCheckpoint above.
+    # The fixpoint loop assumes it owns the session while iterating;
+    # concurrent queries on the same session would need a per-query
+    # session clone, which cross-session DataFrames forbid.
     spark = edges.sparkSession
-    n_edges = und.count()
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    # One shuffle partition per ~50k edges with a floor of 8, capped at
-    # the session value (never WIDEN - min(prev, ...) holds even when the
-    # session is already narrower than 8). The floor was re-measured in
-    # round 5: a single partition serializes the per-round micro-jobs and
-    # is ~1.6x SLOWER than 8 even on a 256-edge fixture (the cost is job
-    # launch, not task count), while a 100 TB edge set still gets session
-    # width. The override is session-global (restored in the finally
-    # below) - the fixpoint loop assumes it owns the session while
-    # iterating, same as any multi-action driver algorithm; concurrent
-    # queries on the same session would need a per-query session clone,
-    # which cross-session DataFrames forbid.
-    narrowed = min(int(prev_sp), max(8, n_edges // 50_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(narrowed))
-    try:
+    with shuffle_partitions(spark, _edge_frame_partitions(spark, und.count())):
         if nodes is None:
             vertices = und.select(F.col("src").alias("node")).distinct()
         else:
@@ -154,8 +152,6 @@ def connected_components(
             raise RuntimeError(
                 f"connected_components: no fixpoint in {max_rounds} rounds"
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
     return labels
 
 
@@ -353,19 +349,13 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()
     # Size the iteration shuffles by the edge frame, not the session
-    # default (same rationale + floor as connected_components above):
-    # every loop relation is O(edges) or O(nodes), tiny next to the
-    # session width tuned for full-table scans; a 100 TB edge list
-    # still gets session width via the min().
+    # default (same rationale as connected_components above): every loop
+    # relation is O(edges) or O(nodes), tiny next to the session width
+    # tuned for full-table scans. The final orderBy/limit is planned
+    # inside the block but runs when the caller acts, at session width.
     spark = edges.sparkSession
-    n_edges = und.count()
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    narrowed = min(int(prev_sp), max(8, n_edges // 50_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(narrowed))
-    try:
+    with shuffle_partitions(spark, _edge_frame_partitions(spark, und.count())):
         result = _pr_iterate(und)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
     return result
 
 

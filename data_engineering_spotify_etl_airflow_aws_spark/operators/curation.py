@@ -41,11 +41,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..caches import persist
-from ..functions import ORACLE_TOKENS, tokens
+from ..functions import ORACLE_TOKENS, STOP_EN, quality_micro, tokens
 from ..registry import query
-from ..tables import load_table, persist_when_scaled
+from ..tables import load_table, persist_when_scaled, quantile_bands
 from .dedup import _DUCK_H32, _SPARK_H32
-from .text import _STOP_EN, _oracle_stop_hits, _stop_hits
+from .text import _oracle_stop_hits, _stop_hits
 
 _OT = ORACLE_TOKENS.format(col="text")
 
@@ -183,7 +183,7 @@ _MIN_TOKENS = 10
                len(toks) AS n_tokens,
                md5(array_to_string(toks, ' ')) AS fp_norm,
                ((0.4 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0)
-                 + 0.3 * (1.0 - CAST({_oracle_stop_hits('toks', _STOP_EN)}
+                 + 0.3 * (1.0 - CAST({_oracle_stop_hits('toks', STOP_EN)}
                                       AS DOUBLE) / len(toks)))
                  + 0.3 * (CAST(len(list_distinct(toks)) AS DOUBLE)
                           / len(toks))) AS quality_score
@@ -222,7 +222,7 @@ def corpus_curation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(t).alias("n_tokens"),
             F.md5(F.array_join(t, " ").cast("binary")).alias("fp_norm"),
             F.size(F.array_distinct(t)).alias("n_uniq"),
-            _stop_hits(t, _STOP_EN).alias("n_stop"),
+            _stop_hits(t, STOP_EN).alias("n_stop"),
         )
         .where(F.col("n_tokens") >= _MIN_TOKENS)
     )
@@ -267,8 +267,6 @@ def corpus_curation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shuffle computes per-band local cumsums, and band offsets ride a window
 # over the band-count table (rows = n_bands, bounded by construction).
 _SEQ_LEN = 512
-_PACK_MIN_BANDS = 8
-_PACK_MAX_BANDS = 65536
 
 
 @query(
@@ -299,27 +297,7 @@ def pack_token_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select(
         "doc_id", F.size(tokens("text")).cast("bigint").alias("n_tokens")
     )
-
-    n_bands = max(
-        _PACK_MIN_BANDS, min(_PACK_MAX_BANDS, 2 * len(docs.inputFiles()))
-    )
-    probs = [i / n_bands for i in range(1, n_bands)]
-    # localCheckpoint freezes the boundaries: `banded` feeds both the
-    # local prefix-sum and the band totals, and a second physical
-    # evaluation of the merge-order-dependent GK sketch could band rows
-    # differently between the two consumers (r9 review)
-    bounds = t.agg(
-        F.percentile_approx("doc_id", probs, max(10_000, 4 * n_bands)).alias(
-            "_bounds"
-        )
-    ).localCheckpoint()
-    banded = (
-        t.join(F.broadcast(bounds))
-        .withColumn(
-            "_band", F.size(F.filter("_bounds", lambda x: x < F.col("doc_id")))
-        )
-        .drop("_bounds")
-    )
+    banded = quantile_bands(t, "doc_id")
     w_local = (
         W.partitionBy("_band")
         .orderBy("doc_id")
@@ -1103,9 +1081,6 @@ def nested_subsample_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale notes (100 TB): per-row quality math + ONE bounded source-keyed
 # shuffle with map-side partials; the normalization is a 1-row
 # broadcast back over the 20-row source table.
-_SMW_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
-
-
 @query(
     "source_mixture_weights",
     oracle=f"""
@@ -1115,7 +1090,7 @@ _SMW_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
                    (0.4 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0)
                     + 0.3 * (1.0 - CAST(len(list_filter(toks,
                           x -> list_contains([{', '.join(
-                              f"'{w}'" for w in _SMW_STOP)}], x)))
+                              f"'{w}'" for w in STOP_EN)}], x)))
                           AS DOUBLE) / len(toks)))
                    + 0.3 * (CAST(len(list_distinct(toks)) AS DOUBLE)
                             / len(toks))) * 1000000 + 0.5) AS BIGINT)
@@ -1152,20 +1127,11 @@ _SMW_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 )
 def source_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
-    stop_lst = ", ".join(f"'{w}'" for w in _SMW_STOP)
-    q_expr = (
-        f"cast(floor(((0.4 * least(cast(size(t) as double) / 100.0, 1.0)"
-        f" + 0.3 * (1.0 - cast(size(filter(t, x -> array_contains("
-        f"array({stop_lst}), x))) as double) / size(t)))"
-        f" + 0.3 * (cast(size(array_distinct(t)) as double) / size(t)))"
-        f" * 1000000 + 0.5) as bigint)"
-    )
     q = (
-        docs.select("source", F.expr(toks).alias("t"))
+        docs.select("source", tokens("text").alias("t"))
         .where(F.size("t") > 0)
         .select(
-            "source", F.size("t").alias("n_toks"), F.expr(q_expr).alias("qm")
+            "source", F.size("t").alias("n_toks"), quality_micro("t").alias("qm")
         )
     )
     s = q.groupBy("source").agg(
@@ -1262,10 +1228,9 @@ _SHARD_H_D = _DUCK_H32.format(s="concat('shard:', CAST(doc_id AS VARCHAR))")
 )
 def shard_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
     a = docs.select(
         (F.expr(_SHARD_H_S) % _SHARD_N).alias("shard"),
-        F.size(F.expr(toks)).alias("n_toks"),
+        F.size(tokens("text")).alias("n_toks"),
     )
     s = a.groupBy("shard").agg(
         F.count("*").cast("bigint").alias("n_docs"),
@@ -1306,9 +1271,6 @@ def shard_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale notes (100 TB): per-row quality/length math; each cut table
 # derives from a value-domain-sized cumulative window; the two 1-row
 # cut relations broadcast back and the final cell rollup is 9 rows.
-_CUR_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
-
-
 @query(
     "curriculum_stage_assignment",
     oracle=f"""
@@ -1318,7 +1280,7 @@ _CUR_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
                    (0.4 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0)
                     + 0.3 * (1.0 - CAST(len(list_filter(toks,
                           x -> list_contains([{', '.join(
-                              f"'{w}'" for w in _CUR_STOP)}], x)))
+                              f"'{w}'" for w in STOP_EN)}], x)))
                           AS DOUBLE) / len(toks)))
                    + 0.3 * (CAST(len(list_distinct(toks)) AS DOUBLE)
                             / len(toks))) * 1000000 + 0.5) AS BIGINT)
@@ -1364,19 +1326,10 @@ def curriculum_stage_assignment(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
-    stop_lst = ", ".join(f"'{w}'" for w in _CUR_STOP)
-    q_expr = (
-        f"cast(floor(((0.4 * least(cast(size(t) as double) / 100.0, 1.0)"
-        f" + 0.3 * (1.0 - cast(size(filter(t, x -> array_contains("
-        f"array({stop_lst}), x))) as double) / size(t)))"
-        f" + 0.3 * (cast(size(array_distinct(t)) as double) / size(t)))"
-        f" * 1000000 + 0.5) as bigint)"
-    )
     q = (
-        docs.select(F.expr(toks).alias("t"))
+        docs.select(tokens("text").alias("t"))
         .where(F.size("t") > 0)
-        .select(F.size("t").alias("n_toks"), F.expr(q_expr).alias("q_micro"))
+        .select(F.size("t").alias("n_toks"), quality_micro("t").alias("q_micro"))
     )
     # Scale-gated persist (r17): `q` feeds both tercile-cut histograms
     # and the final stage rollup - 3 runs of the tokenize + quality

@@ -43,7 +43,7 @@ from pyspark.sql.window import Window as W
 from pyspark.storagelevel import StorageLevel
 
 from ..caches import persist
-from ..functions import ORACLE_TOKENS
+from ..functions import ORACLE_TOKENS, STOP_EN, quality_micro, tokens
 from ..registry import query
 from ..tables import load_table, widen_small_scan
 
@@ -103,9 +103,8 @@ def _spark_shingle_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the per-row regex+shingle work dominates; widen the 1-split fixture
     # scan so it parallelizes (no-op on a real many-split corpus)
     docs = widen_small_scan(load_table(spark, sf_dir, "documents"))
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
     return (
-        docs.select("doc_id", F.expr(toks).alias("t"))
+        docs.select("doc_id", tokens("text").alias("t"))
         .select("doc_id", F.expr(_SPARK_SHINGLES.format(t="t")).alias("sh"))
         .withColumn("n_sh", F.size("sh"))
     )
@@ -442,9 +441,8 @@ _DUCK_ASSEMBLE = " + ".join(
 )
 def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
     tok = (
-        docs.select("doc_id", F.explode(F.expr(toks)).alias("token"))
+        docs.select("doc_id", F.explode(tokens("text")).alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count("*").alias("cnt"))
         .select(
@@ -947,9 +945,8 @@ _SH_TAU = 2
 )
 def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
     tok = (
-        docs.select("doc_id", F.explode(F.expr(toks)).alias("token"))
+        docs.select("doc_id", F.explode(tokens("text")).alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count("*").alias("cnt"))
         .select(
@@ -1085,14 +1082,13 @@ def dup_ngram_span_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-doc join - without the persist the whole explode + md5 pass
     # executes twice (guide §5).
     docs = widen_small_scan(load_table(spark, sf_dir, "documents"))
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
     gram = (
         f"transform(sequence(1, size(tk) - {_DUPSPAN_N - 1}), "
         f"i -> substring(md5(cast(concat_ws(' ', "
         f"slice(tk, i, {_DUPSPAN_N})) as binary)), 1, 16))"
     )
     g = (
-        docs.select("doc_id", F.expr(toks).alias("tk"))
+        docs.select("doc_id", tokens("text").alias("tk"))
         .where(F.size("tk") >= _DUPSPAN_N)
         .select("doc_id", F.explode(F.expr(gram)).alias("gk"))
     )
@@ -1117,9 +1113,6 @@ def dup_ngram_span_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("n_grams").cast("double")
         ).alias("dup_share"),
     )
-
-
-_GOLD_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
 
 # ---------------------------------------------------------------------------
@@ -1171,7 +1164,7 @@ _GOLD_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
                    (0.4 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0)
                     + 0.3 * (1.0 - CAST(len(list_filter(toks,
                           x -> list_contains([{', '.join(
-                              f"'{w}'" for w in _GOLD_STOP)}], x)))
+                              f"'{w}'" for w in STOP_EN)}], x)))
                           AS DOUBLE) / len(toks)))
                    + 0.3 * (CAST(len(list_distinct(toks)) AS DOUBLE)
                             / len(toks))) * 1000000 + 0.5) AS BIGINT)
@@ -1192,9 +1185,8 @@ _GOLD_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 )
 def golden_doc_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
     tok = (
-        docs.select("doc_id", F.explode(F.expr(toks)).alias("token"))
+        docs.select("doc_id", F.explode(tokens("text")).alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count("*").alias("c"))
     )
@@ -1209,18 +1201,10 @@ def golden_doc_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    stop_lst = ", ".join(f"'{w}'" for w in _GOLD_STOP)
-    q_expr = (
-        f"cast(floor(((0.4 * least(cast(size(t) as double) / 100.0, 1.0)"
-        f" + 0.3 * (1.0 - cast(size(filter(t, x -> array_contains("
-        f"array({stop_lst}), x))) as double) / size(t)))"
-        f" + 0.3 * (cast(size(array_distinct(t)) as double) / size(t)))"
-        f" * 1000000 + 0.5) as bigint)"
-    )
     q = (
-        docs.select("doc_id", F.expr(toks).alias("t"))
+        docs.select("doc_id", tokens("text").alias("t"))
         .where(F.size("t") > 0)
-        .select("doc_id", F.expr(q_expr).alias("q_micro"))
+        .select("doc_id", quality_micro("t").alias("q_micro"))
     )
     key = F.col("q_micro") * F.lit(1_000_000_000_000) - F.col("doc_id")
     return (
@@ -1285,11 +1269,10 @@ def _impact_oracle() -> str:
 def near_dup_removal_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _minhash_pairs(_shingle_base(spark, sf_dir))
     removed = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
     d = (
         load_table(spark, sf_dir, "documents")
         .select(
-            "doc_id", "n_chars", F.size(F.expr(toks)).alias("n_toks")
+            "doc_id", "n_chars", F.size(tokens("text")).alias("n_toks")
         )
         .join(
             removed.withColumn("is_removed", F.lit(True)), "doc_id", "left"

@@ -19,7 +19,7 @@ from pyspark.sql.window import Window as W
 from ..caches import persist
 from ..functions import dsum, oracle_dsum
 from ..registry import query
-from ..tables import load_table, persist_when_scaled
+from ..tables import load_table, persist_when_scaled, quantile_bands
 from .dedup import _DUCK_H32 as _G_DH32
 from .dedup import _SPARK_H32 as _G_SH32
 
@@ -278,14 +278,8 @@ def intersect_segment_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   5. global rank = offset + local rank; ntile's exact bucket arithmetic
 #      (first n%10 deciles get one extra row) reproduces ntile(10) row for
 #      row, verified by the unchanged ntile oracle.
-#
-# Band count scales with the scan partitioning (~128 MB splits by
-# spark.sql.files.maxPartitionBytes): ~2 bands per split keeps each
-# band's sort at roughly half an input split regardless of data volume,
-# so the plan that runs on one parquet file at sf0.1 is the same plan
-# that runs on 100k files at 100 TB.
-_MIN_BANDS = 8
-_MAX_BANDS = 65536
+# Steps 1-2 are tables.quantile_bands, shared with the other exact
+# global-rank plans.
 
 
 @query(
@@ -304,27 +298,7 @@ _MAX_BANDS = 65536
 )
 def ntile_price_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    n_bands = max(_MIN_BANDS, min(_MAX_BANDS, 2 * len(o.inputFiles())))
-    probs = [i / n_bands for i in range(1, n_bands)]
-    # localCheckpoint freezes the boundaries: `banded` feeds both the
-    # ranking and the counts, and a second physical evaluation of the
-    # merge-order-dependent GK sketch could band rows differently
-    # between the two consumers (r9 review)
-    bounds = o.agg(
-        F.percentile_approx(
-            "o_totalprice", probs, max(10_000, 4 * n_bands)
-        ).alias("_bounds")
-    ).localCheckpoint()
-    # band = #boundaries strictly below the price: rows equal to a boundary
-    # all land in the same band, so bands strictly respect the price order
-    # and (band, price, orderkey) is a total order.
-    banded = (
-        o.join(F.broadcast(bounds))
-        .withColumn(
-            "_band", F.size(F.filter("_bounds", lambda x: x < F.col("o_totalprice")))
-        )
-        .drop("_bounds")
-    )
+    banded = quantile_bands(o, "o_totalprice")
     wb = W.partitionBy("_band").orderBy("o_totalprice", "o_orderkey")
     ranked = banded.withColumn("_lrn", F.row_number().over(wb))
 

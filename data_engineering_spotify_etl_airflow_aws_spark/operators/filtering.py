@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..caches import persist
-from ..functions import ORACLE_TOKENS, tokens
+from ..functions import ORACLE_TOKENS, STOP_EN, quality_micro, tokens
 from ..registry import query
 from ..tables import load_table, persist_when_scaled, widen_small_scan
 
@@ -496,9 +496,6 @@ def cross_source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale notes (100 TB): per-row quality math, ONE bounded-key (11-band)
 # shuffle with map-side partials; the cumulative windows run over the
 # band table. Nothing joins, nothing broadcasts.
-_QPC_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
-
-
 @query(
     "quality_pruning_curve",
     oracle=f"""
@@ -508,7 +505,7 @@ _QPC_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
                    (0.4 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0)
                     + 0.3 * (1.0 - CAST(len(list_filter(toks,
                           x -> list_contains([{', '.join(
-                              f"'{w}'" for w in _QPC_STOP)}], x)))
+                              f"'{w}'" for w in STOP_EN)}], x)))
                           AS DOUBLE) / len(toks)))
                    + 0.3 * (CAST(len(list_distinct(toks)) AS DOUBLE)
                             / len(toks))) * 1000000 + 0.5) AS BIGINT)
@@ -538,19 +535,10 @@ _QPC_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 )
 def quality_pruning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
-    stop_lst = ", ".join(f"'{w}'" for w in _QPC_STOP)
-    q_expr = (
-        f"cast(floor(((0.4 * least(cast(size(t) as double) / 100.0, 1.0)"
-        f" + 0.3 * (1.0 - cast(size(filter(t, x -> array_contains("
-        f"array({stop_lst}), x))) as double) / size(t)))"
-        f" + 0.3 * (cast(size(array_distinct(t)) as double) / size(t)))"
-        f" * 1000000 + 0.5) as bigint)"
-    )
     q = (
-        docs.select(F.expr(toks).alias("t"))
+        docs.select(tokens("text").alias("t"))
         .where(F.size("t") > 0)
-        .select(F.size("t").alias("n_toks"), F.expr(q_expr).alias("q_micro"))
+        .select(F.size("t").alias("n_toks"), quality_micro("t").alias("q_micro"))
     )
     b = (
         q.select(
@@ -857,9 +845,6 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # at micro.
 #
 # Scale notes (100 TB): per-row math + a 1-row exact-moment reduction.
-_LQC_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
-
-
 @query(
     "length_quality_correlation",
     oracle=f"""
@@ -869,7 +854,7 @@ _LQC_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
                    (0.4 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0)
                     + 0.3 * (1.0 - CAST(len(list_filter(toks,
                           t -> list_contains([{', '.join(
-                              f"'{w}'" for w in _LQC_STOP)}], t)))
+                              f"'{w}'" for w in STOP_EN)}], t)))
                           AS DOUBLE) / len(toks)))
                    + 0.3 * (CAST(len(list_distinct(toks)) AS DOUBLE)
                             / len(toks))) * 1000000 + 0.5) AS BIGINT) AS y
@@ -900,21 +885,12 @@ def length_quality_correlation(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
-    stop_lst = ", ".join(f"'{w}'" for w in _LQC_STOP)
-    q_expr = (
-        f"cast(floor(((0.4 * least(cast(size(t) as double) / 100.0, 1.0)"
-        f" + 0.3 * (1.0 - cast(size(filter(t, x -> array_contains("
-        f"array({stop_lst}), x))) as double) / size(t)))"
-        f" + 0.3 * (cast(size(array_distinct(t)) as double) / size(t)))"
-        f" * 1000000 + 0.5) as bigint)"
-    )
     q = (
-        docs.select(F.expr(toks).alias("t"))
+        docs.select(tokens("text").alias("t"))
         .where(F.size("t") > 0)
         .select(
             F.size("t").cast("bigint").alias("x"),
-            F.expr(q_expr).alias("y"),
+            quality_micro("t").alias("y"),
         )
     )
     # r12: decimal accumulation + cast-one-factor products (the corpus

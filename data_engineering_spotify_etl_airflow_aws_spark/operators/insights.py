@@ -34,7 +34,7 @@ from pyspark.sql.window import Window as W
 
 from ..caches import persist
 from ..registry import query
-from ..tables import load_table, persist_when_scaled
+from ..tables import load_table, persist_when_scaled, quantile_bands
 
 
 def _order_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2064,8 +2064,6 @@ def weekly_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # window over the BAND-COUNT-sized table. All per-decile math is exact
 # ints; rates/lift/cum-capture are the final IEEE divisions, mirrored
 # association-for-association in the oracle.
-_LIFT_MIN_BANDS = 8
-_LIFT_MAX_BANDS = 65536
 
 
 @query(
@@ -2108,32 +2106,10 @@ def decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("label"),
     )
-    n_bands = max(
-        _LIFT_MIN_BANDS, min(_LIFT_MAX_BANDS, 2 * len(ev.inputFiles()))
-    )
     pu = per_user.select(
         "user_id", "label", (-F.col("score")).alias("key")
     )
-    probs = [i / n_bands for i in range(1, n_bands)]
-    # localCheckpoint freezes the approx boundaries: `banded` feeds BOTH
-    # the per-band ranking and the offset counts, and Greenwald-Khanna
-    # summaries are merge-order-dependent, so two physical evaluations
-    # of this subtree could band the same row differently and corrupt
-    # the offsets (r9 review). One bounded 1-row job; correctness never
-    # depends on boundary QUALITY, only on both consumers seeing the
-    # SAME boundaries.
-    bounds = pu.agg(
-        F.percentile_approx("key", probs, max(10_000, 4 * n_bands)).alias(
-            "_bounds"
-        )
-    ).localCheckpoint()
-    banded = (
-        pu.join(F.broadcast(bounds))
-        .withColumn(
-            "_band", F.size(F.filter("_bounds", lambda x: x < F.col("key")))
-        )
-        .drop("_bounds")
-    )
+    banded = quantile_bands(pu, "key")
     wb = W.partitionBy("_band").orderBy("key", "user_id")
     ranked = banded.withColumn("_lrn", F.row_number().over(wb))
     counts = banded.groupBy("_band").agg(F.count("*").alias("_bn"))

@@ -22,14 +22,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import ORACLE_TOKENS, tokens
+from ..functions import ORACLE_TOKENS, STOP_EN, tokens
 from ..registry import query
 from ..tables import load_table, persist_when_scaled
 
-# English-ish stopword set; the synthetic corpus is English-like tech text
+# Stopword sets beside functions.STOP_EN; the synthetic corpus is English-like tech text
 # for every lang label, so the ID signal is degenerate by construction -
 # the query exercises the mechanics (set-membership counting + argmax).
-_STOP_EN = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 _STOP_DE = ("der", "die", "das", "und", "ist", "ein", "zu", "den")
 _STOP_ES = ("el", "la", "de", "que", "y", "en", "un", "es")
 
@@ -70,7 +69,7 @@ _OT = ORACLE_TOKENS.format(col="text")
                len(toks) AS n_tokens,
                len(list_distinct(toks)) AS n_uniq,
                list_sum(list_transform(toks, t -> length(t))) AS sum_tok_len,
-               {_oracle_stop_hits('toks', _STOP_EN)} AS n_stop
+               {_oracle_stop_hits('toks', STOP_EN)} AS n_stop
         FROM (SELECT doc_id, lang, text, {_OT} AS toks FROM documents)
     )
     WHERE n_tokens > 0
@@ -96,7 +95,7 @@ def text_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.aggregate(
                 F.transform(t, F.length), F.lit(0), lambda acc, v: acc + v
             ).alias("sum_tok_len"),
-            _stop_hits(t, _STOP_EN).alias("n_stop"),
+            _stop_hits(t, STOP_EN).alias("n_stop"),
         )
         .where(F.col("n_tokens") > 0)
     )
@@ -171,7 +170,7 @@ def token_counts_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'es' END AS pred_lang
     FROM (
         SELECT doc_id, lang,
-               {_oracle_stop_hits('toks', _STOP_EN)} AS hits_en,
+               {_oracle_stop_hits('toks', STOP_EN)} AS hits_en,
                {_oracle_stop_hits('toks', _STOP_DE)} AS hits_de,
                {_oracle_stop_hits('toks', _STOP_ES)} AS hits_es
         FROM (SELECT doc_id, lang, {_OT} AS toks FROM documents)
@@ -186,7 +185,7 @@ def lang_id_stopword(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs.select("doc_id", "lang", tokens("text").alias("t")).select(
         "doc_id",
         "lang",
-        _stop_hits(t, _STOP_EN).alias("hits_en"),
+        _stop_hits(t, STOP_EN).alias("hits_en"),
         _stop_hits(t, _STOP_DE).alias("hits_de"),
         _stop_hits(t, _STOP_ES).alias("hits_es"),
     )
@@ -487,7 +486,7 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale notes (100 TB): pure per-row projection - zero shuffle; the
 # regex work is JVM codegen inside the scan stage.
 def _register_lexical() -> None:
-    from ..functions import ORACLE_TOKENS, tokens
+    from ..functions import ORACLE_TOKENS, STOP_EN, tokens
 
     toks = ORACLE_TOKENS.format(col="text")
 
@@ -569,7 +568,7 @@ _register_lexical()
 def _register_zipf() -> None:
     from pyspark.sql.window import Window as W
 
-    from ..functions import ORACLE_TOKENS, tokens
+    from ..functions import ORACLE_TOKENS, STOP_EN, tokens
 
     toks = ORACLE_TOKENS.format(col="text")
 
@@ -1110,7 +1109,7 @@ def bpe_apply_top_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ELSE 'es' END AS pred_lang
         FROM (
             SELECT lang,
-                   {_oracle_stop_hits('toks', _STOP_EN)} AS hits_en,
+                   {_oracle_stop_hits('toks', STOP_EN)} AS hits_en,
                    {_oracle_stop_hits('toks', _STOP_DE)} AS hits_de,
                    {_oracle_stop_hits('toks', _STOP_ES)} AS hits_es
             FROM (SELECT lang, {_OT} AS toks FROM documents)
@@ -1134,7 +1133,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = F.col("t")
     d = docs.select("lang", tokens("text").alias("t")).select(
         "lang",
-        _stop_hits(t, _STOP_EN).alias("hits_en"),
+        _stop_hits(t, STOP_EN).alias("hits_en"),
         _stop_hits(t, _STOP_DE).alias("hits_de"),
         _stop_hits(t, _STOP_ES).alias("hits_es"),
     )

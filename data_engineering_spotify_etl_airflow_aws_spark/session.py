@@ -10,6 +10,8 @@ paths. Nothing in the operators hardcodes partition counts.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -60,6 +62,20 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
                 f"oracle parity would fail downstream"
             )
     return spark
+
+
+@contextmanager
+def shuffle_partitions(spark: SparkSession, n: int) -> Iterator[None]:
+    """Run the body at n shuffle partitions, then restore the session's
+    previous width on every exit path. The override is session-global:
+    the body assumes it owns the session while it runs, like any
+    multi-action driver algorithm."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _read_cgroup_limit_file(path: str) -> int | None:

@@ -40,7 +40,7 @@ from ..operators.multimodal import (
     ppm_payload_df,
 )
 from ..registry import ORACLES, query
-from .chunks import _CHUNK_ROOT, run_scratch
+from .chunks import _CHUNK_ROOT, run_available_now, run_scratch
 
 _PAYLOAD_SCHEMA = "doc_id bigint, payload binary"
 _N_CHUNKS = 4
@@ -95,14 +95,12 @@ def stream_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
 
     chunks = ppm_payload_feed(spark, sf_dir)
-    q = (
+    run_available_now(
+        spark,
         decode_stream(spark, chunks)
         .writeStream.format("parquet")
-        .option("path", str(base / "data"))
-        .option("checkpointLocation", str(base / "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
+        .option("path", str(base / "data")),
+        str(base / "checkpoint"),
     )
-    q.awaitTermination()
 
     return spark.read.parquet(str(base / "data")).orderBy("doc_id")

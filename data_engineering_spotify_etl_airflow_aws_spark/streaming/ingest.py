@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from ..pipeline.schemas import RAW_PLAYLIST_SCHEMA
 from ..pipeline.transforms import INBOX_DIR, _DATE_RE, explode_raw, songs_projection
 from ..registry import query
-from .chunks import run_scratch
+from .chunks import run_available_now, run_scratch
 
 
 def read_raw_stream(
@@ -90,15 +90,13 @@ def ingest_songs_available_now(
         spark, inbox_dir, archive_dir, max_files_per_trigger
     )
     songs = songs_projection(explode_raw(raw))
-    q = (
+    run_available_now(
+        spark,
         songs.writeStream.format("parquet")
         .option("path", dest_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("scrape_date")
-        .trigger(availableNow=True)
-        .start()
+        .partitionBy("scrape_date"),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def ingest_songs_continuous(

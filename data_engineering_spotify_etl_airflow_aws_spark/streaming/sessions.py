@@ -59,7 +59,12 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..registry import query
 from ..operators.windows import _MACRO_GAP_US, _MICRO_GAP_US
-from .chunks import plain_event_feed, run_scratch
+from .chunks import (
+    plain_event_feed,
+    read_event_feed,
+    run_available_now,
+    run_scratch,
+)
 
 DELTA_SCHEMA = T.StructType(
     [
@@ -267,14 +272,8 @@ def _drain_session_deltas(spark, sf_dir: str, out_dir: str) -> None:
     from pyspark.sql import functions as F
 
     chunks = plain_event_feed(spark, sf_dir)
-    schema = (
-        "event_id bigint, user_id bigint, ts timestamp, "
-        "event_type string, value double"
-    )
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")  # >1 real micro-batch (reader!)
-        .parquet(chunks)
+        read_event_feed(spark, chunks, 2)  # >1 real micro-batch
         # delay 0 is exact on this feed: equal timestamps never straddle
         # chunk files (chunks.py), so every later batch is strictly past
         # the watermark and nothing is ever late-dropped
@@ -291,20 +290,13 @@ def _drain_session_deltas(spark, sf_dir: str, out_dir: str) -> None:
         batch_df.write.mode("append").parquet(out_dir)
 
     base = run_scratch("session_deltas")
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            session_delta_stream(stream)
-            .writeStream.foreachBatch(_append)
-            .option("checkpointLocation", str(base / "checkpoint"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+    run_available_now(
+        spark,
+        session_delta_stream(stream)
+        .writeStream.foreachBatch(_append)
+        .outputMode("append"),
+        str(base / "checkpoint"),
+    )
 
 
 @query(

@@ -31,7 +31,12 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
 from ..registry import query
-from .chunks import run_scratch
+from .chunks import (
+    plain_event_feed,
+    read_event_feed,
+    run_available_now,
+    run_scratch,
+)
 
 STATE_SCHEMA = T.StructType(
     [
@@ -173,24 +178,15 @@ def stateful_running_totals(spark, sf_dir: str) -> DataFrame:
     the snapshot with the greatest n_events, which is strictly monotone
     per emission - must equal the batch aggregate, hash-exact."""
     import shutil
-    from pathlib import Path
 
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
-    from .chunks import plain_event_feed
-
     base = run_scratch("stateful_totals")
     shutil.rmtree(base, ignore_errors=True)
     chunks = plain_event_feed(spark, sf_dir)
-    schema = (
-        "event_id bigint, user_id bigint, ts timestamp, "
-        "event_type string, value double"
-    )
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "3")  # >1 real micro-batch
-        .parquet(chunks)
+        read_event_feed(spark, chunks, 3)  # >1 real micro-batch
         .select(
             "user_id",
             F.floor(F.col("value") * 1_000_000).cast("long").alias("value_u6"),
@@ -202,21 +198,13 @@ def stateful_running_totals(spark, sf_dir: str) -> DataFrame:
     def _append_upserts(batch_df: DataFrame, _batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out_dir)
 
-    # state stores sized to state volume, not scan parallelism (joins.py)
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            running_user_totals_u6(stream)
-            .writeStream.foreachBatch(_append_upserts)
-            .option("checkpointLocation", str(base / "checkpoint"))
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+    run_available_now(
+        spark,
+        running_user_totals_u6(stream)
+        .writeStream.foreachBatch(_append_upserts)
+        .outputMode("update"),
+        str(base / "checkpoint"),
+    )
 
     upserts = spark.read.parquet(out_dir)
     w = W.partitionBy("user_id").orderBy(F.desc("n_events"))
@@ -340,23 +328,14 @@ def stream_rate_limit_flags(spark, sf_dir: str) -> DataFrame:
     the ordering guarantee, identical values) to the batch
     rate_limit_flags window; the oracle is the same SQL."""
     import shutil
-    from pathlib import Path
 
     from pyspark.sql import functions as F
-
-    from .chunks import plain_event_feed
 
     base = run_scratch("rate_limit")
     shutil.rmtree(base, ignore_errors=True)
     chunks = plain_event_feed(spark, sf_dir)
-    schema = (
-        "event_id bigint, user_id bigint, ts timestamp, "
-        "event_type string, value double"
-    )
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "3")  # >1 real micro-batch
-        .parquet(chunks)
+        read_event_feed(spark, chunks, 3)  # >1 real micro-batch
         .select(
             "user_id",
             "event_id",
@@ -369,20 +348,13 @@ def stream_rate_limit_flags(spark, sf_dir: str) -> DataFrame:
     def _append_flags(batch_df: DataFrame, _batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out_dir)
 
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            rate_limit_stream(stream)
-            .writeStream.foreachBatch(_append_flags)
-            .option("checkpointLocation", str(base / "checkpoint"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+    run_available_now(
+        spark,
+        rate_limit_stream(stream)
+        .writeStream.foreachBatch(_append_flags)
+        .outputMode("append"),
+        str(base / "checkpoint"),
+    )
 
     flags = spark.read.parquet(out_dir)
     throttled = F.sum("throttled")

@@ -35,11 +35,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from .chunks import plain_event_feed, run_scratch
-
-_EVENT_SCHEMA = (
-    "event_id bigint, user_id bigint, ts timestamp, "
-    "event_type string, value double"
+from .chunks import (
+    plain_event_feed,
+    read_event_feed,
+    run_available_now,
+    run_scratch,
 )
 
 
@@ -92,21 +92,14 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     chunks = plain_event_feed(spark, sf_dir)
 
-    q = (
-        spark.readStream.schema(_EVENT_SCHEMA)
-        # READER option: 6 chunks / 3 per trigger = multiple genuine
-        # micro-batches; writer-side placement is silently ignored
-        # (r9 review fix)
-        .option("maxFilesPerTrigger", "3")
-        .parquet(chunks)
-        .writeStream.foreachBatch(
+    # 6 chunks / 3 per trigger = multiple genuine micro-batches
+    run_available_now(
+        spark,
+        read_event_feed(spark, chunks, 3).writeStream.foreachBatch(
             lambda df, bid: upsert_batch(spark, state, df, bid)
-        )
-        .option("checkpointLocation", str(base / "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
+        ),
+        str(base / "checkpoint"),
     )
-    q.awaitTermination()
 
     latest = _versions(state)[-1][1]
     return spark.read.parquet(str(latest)).select(

@@ -166,3 +166,41 @@ def widen_small_scan(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+# Band count scales with the scan partitioning (~128 MB splits by
+# spark.sql.files.maxPartitionBytes): ~2 bands per split keeps each
+# band's sort at roughly half an input split regardless of data volume,
+# so the plan that runs on one parquet file at sf0.1 is the same plan
+# that runs on 100k files at 100 TB.
+_MIN_BANDS = 8
+_MAX_BANDS = 65536
+
+
+def quantile_bands(df: DataFrame, key: str) -> DataFrame:
+    """df plus `_band`: how many approx-percentile boundaries of `key`
+    lie strictly below the row's key. Rows equal to a boundary all land
+    in the same band, so bands strictly respect key order and (band,
+    key, tiebreak) is a total order - the exact global-rank device
+    without a single-partition sort (ntile_price_deciles, extras.py).
+
+    The boundaries are one bounded 1-row job frozen by localCheckpoint:
+    the banded rows feed two consumers (per-band ranking and band
+    totals), and two physical evaluations of the merge-order-dependent
+    Greenwald-Khanna sketch could band a row differently between them
+    (r9 review). Correctness never depends on boundary QUALITY, only on
+    both consumers seeing the SAME boundaries."""
+    n_bands = max(_MIN_BANDS, min(_MAX_BANDS, 2 * len(df.inputFiles())))
+    probs = [i / n_bands for i in range(1, n_bands)]
+    bounds = df.agg(
+        F.percentile_approx(key, probs, max(10_000, 4 * n_bands)).alias(
+            "_bounds"
+        )
+    ).localCheckpoint()
+    return (
+        df.join(F.broadcast(bounds))
+        .withColumn(
+            "_band", F.size(F.filter("_bounds", lambda x: x < F.col(key)))
+        )
+        .drop("_bounds")
+    )

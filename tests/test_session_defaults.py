@@ -120,3 +120,28 @@ def test_driver_mem_small_host_clamps_down(tmp_path, monkeypatch):
     monkeypatch.setattr(session, "_cgroup_limit_bytes", lambda: None)
     _patch_meminfo(tmp_path, monkeypatch, 6 * 1024 * 1024)  # 6 GiB
     assert session._default_driver_mem() == "3g"
+
+
+
+class _FakeSession:
+    """Just the RuntimeConfig surface shuffle_partitions touches."""
+
+    class _Conf(dict):
+        def set(self, key, value):
+            self[key] = value
+
+    def __init__(self, width: str):
+        self.conf = self._Conf({"spark.sql.shuffle.partitions": width})
+
+
+def test_shuffle_partitions_restores_when_body_raises():
+    """The width override holds inside the block and the previous value
+    comes back on every exit path, an exception included."""
+    import pytest
+
+    spark = _FakeSession("32")
+    with pytest.raises(RuntimeError, match="planted"):
+        with session.shuffle_partitions(spark, 3):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+            raise RuntimeError("planted")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "32"

@@ -409,6 +409,9 @@ def test_stream_stream_join_matches_batch_across_batches(spark, tmp_path):
     within the window), while clicks outside the attribution window never
     pair. Batch boundaries are driven explicitly via one file per chunk +
     maxFilesPerTrigger=1."""
+    from data_engineering_spotify_etl_airflow_aws_spark.streaming.chunks import (
+        run_available_now,
+    )
     from data_engineering_spotify_etl_airflow_aws_spark.streaming.joins import (
         click_purchase_join_stream,
     )
@@ -440,16 +443,14 @@ def test_stream_stream_join_matches_batch_across_batches(spark, tmp_path):
         df.coalesce(1).write.parquet(str(chunk_dir / f"c{i}"))
     # file source lists paths in order -> c0 then c1
     out = tmp_path / "out"
-    q = (
-        click_purchase_join_stream(spark, str(chunk_dir / "*"))
+    q = run_available_now(
+        spark,
+        click_purchase_join_stream(spark, str(chunk_dir / "*"), 1)
         .writeStream.format("parquet")
-        .option("path", str(out / "data"))
-        .option("checkpointLocation", str(out / "ckpt"))
-        .option("maxFilesPerTrigger", "1")
-        .trigger(availableNow=True)
-        .start()
+        .option("path", str(out / "data")),
+        str(out / "ckpt"),
     )
-    q.awaitTermination()
+    assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 2
     got = sorted(
         (r.purchase_id, r.click_id)
         for r in spark.read.parquet(str(out / "data")).collect()
@@ -743,6 +744,7 @@ def test_registered_streams_run_multiple_microbatches(spark):
 
     from data_engineering_spotify_etl_airflow_aws_spark.streaming.chunks import (
         plain_event_feed,
+        run_available_now,
         run_scratch,
     )
     from data_engineering_spotify_etl_airflow_aws_spark.streaming.decode import (
@@ -756,14 +758,13 @@ def test_registered_streams_run_multiple_microbatches(spark):
     def n_batches(stream_df, name):
         base = run_scratch(f"mb_probe_{name}")
         _shutil.rmtree(base, ignore_errors=True)
-        q = (
-            stream_df.writeStream.format("parquet")
-            .option("path", str(base / "data"))
-            .option("checkpointLocation", str(base / "checkpoint"))
-            .trigger(availableNow=True)
-            .start()
+        q = run_available_now(
+            spark,
+            stream_df.writeStream.format("parquet").option(
+                "path", str(base / "data")
+            ),
+            str(base / "checkpoint"),
         )
-        q.awaitTermination()
         return len([p for p in q.recentProgress if p["numInputRows"] > 0])
 
     decode_batches = n_batches(
@@ -875,6 +876,8 @@ def test_session_delta_stream_multibatch_and_timer_expiry(spark):
 
     from data_engineering_spotify_etl_airflow_aws_spark.streaming.chunks import (
         plain_event_feed,
+        read_event_feed,
+        run_available_now,
         run_scratch,
     )
     from data_engineering_spotify_etl_airflow_aws_spark.streaming.sessions import (
@@ -882,29 +885,21 @@ def test_session_delta_stream_multibatch_and_timer_expiry(spark):
     )
 
     chunks = plain_event_feed(spark, SF_SMOKE)
-    schema = (
-        "event_id bigint, user_id bigint, ts timestamp, "
-        "event_type string, value double"
-    )
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(chunks)
+        read_event_feed(spark, chunks, 2)
         .withWatermark("ts", "0 seconds")
         .select("user_id", "event_id", F.col("ts"), F.unix_micros("ts").alias("ts_us"))
     )
     base = run_scratch("session_mb_probe")
     _shutil.rmtree(base, ignore_errors=True)
-    q = (
+    q = run_available_now(
+        spark,
         session_delta_stream(stream)
         .writeStream.format("parquet")
         .option("path", str(base / "data"))
-        .option("checkpointLocation", str(base / "checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        str(base / "checkpoint"),
     )
-    q.awaitTermination()
     data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
     assert len(data_batches) >= 2, len(data_batches)
     removed = sum(
@@ -1021,18 +1016,14 @@ def test_tws_session_stream_end_to_end(spark):
 
     from data_engineering_spotify_etl_airflow_aws_spark.streaming.chunks import (
         plain_event_feed,
+        read_event_feed,
+        run_available_now,
         run_scratch,
     )
 
     chunks = plain_event_feed(spark, SF_SMOKE)
-    schema = (
-        "event_id bigint, user_id bigint, ts timestamp, "
-        "event_type string, value double"
-    )
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(chunks)
+        read_event_feed(spark, chunks, 2)
         .withWatermark("ts", "0 seconds")
         .select("user_id", "event_id", F.col("ts"), F.unix_micros("ts").alias("ts_us"))
     )
@@ -1045,16 +1036,14 @@ def test_tws_session_stream_end_to_end(spark):
         "RocksDBStateStoreProvider",
     )
     try:
-        q = (
+        run_available_now(
+            spark,
             session_delta_stream_tws(stream)
             .writeStream.format("parquet")
             .option("path", str(base / "data"))
-            .option("checkpointLocation", str(base / "checkpoint"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            str(base / "checkpoint"),
         )
-        q.awaitTermination()
     finally:
         if prev is not None:
             spark.conf.set(
@@ -1080,3 +1069,80 @@ def test_tws_session_stream_end_to_end(spark):
         for r in macro_session_rollup(spark, SF_SMOKE).collect()
     }
     assert got == want
+
+
+# ---------------------------------------------------------------------------
+# The bounded-stream runner (streaming/chunks.py): one owner for how a
+# registered stream drains
+
+
+def test_bounded_stream_runner_restores_width_when_stream_fails(spark, tmp_path):
+    """run_available_now runs the stream at the state width and restores
+    the session's previous width even when the stream itself fails."""
+    import pytest
+
+    from data_engineering_spotify_etl_airflow_aws_spark.streaming.chunks import (
+        read_event_feed,
+        run_available_now,
+    )
+
+    feed = tmp_path / "feed"
+    spark.createDataFrame(
+        [(1, 7, "click", 1.0)],
+        "event_id bigint, user_id bigint, event_type string, value double",
+    ).select(
+        "event_id", "user_id", F.current_timestamp().alias("ts"),
+        "event_type", "value",
+    ).write.parquet(str(feed))
+    seen = []
+
+    def fail(batch_df, _batch_id):
+        seen.append(batch_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        raise RuntimeError("planted batch failure")
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "13")
+    try:
+        with pytest.raises(Exception, match="planted batch failure"):
+            run_available_now(
+                spark,
+                read_event_feed(spark, str(feed), None).writeStream.foreachBatch(fail),
+                str(tmp_path / "checkpoint"),
+            )
+        assert seen == ["8"]
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "13"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_bounded_stream_decisions_have_one_owner():
+    """Lint over the package: the availableNow trigger is set only by the
+    bounded-stream runner, the shuffle width only by session.py, and the
+    event-feed schema string is spelled once."""
+    import ast
+    from pathlib import Path
+
+    root = Path(engine.__file__).parent
+    triggers, width_sets, schemas = [], [], []
+    for path in sorted(root.rglob("*.py")):
+        rel = str(path.relative_to(root))
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                if any(k.arg == "availableNow" for k in node.keywords):
+                    triggers.append(rel)
+                if (
+                    node.func.attr == "set"
+                    and node.args
+                    and isinstance(node.args[0], ast.Constant)
+                    and node.args[0].value == "spark.sql.shuffle.partitions"
+                ):
+                    width_sets.append(rel)
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and "event_id bigint" in node.value
+            ):
+                schemas.append(rel)
+    assert triggers == ["streaming/chunks.py"], triggers
+    assert set(width_sets) == {"session.py"}, width_sets
+    assert schemas == ["streaming/chunks.py"], schemas

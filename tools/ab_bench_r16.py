@@ -2,9 +2,8 @@
 discipline: any perf-relevant change ships with an interleaved pair in
 evidence/).
 
-Generalizes tools/ab_bench_r15.py to an arbitrary query list: compares a
-PRE tree (a git worktree pinned at the pre-change commit) against the
-working tree. Interleaving: A B A B ... N times each, one process per
+Compares a PRE tree (a checkout pinned at the pre-change commit) against
+the working tree over an arbitrary query list. Interleaving: A B A B ... N times each, one process per
 sample (fresh JVM, same warmup), min-of-N per query per side. Values are
 verified identical between sides before timing counts.
 
